@@ -88,19 +88,19 @@ def resolve_entities(
     of its fuzzy-match component, or its own ``rid`` when unmatched
     (singleton entity).
 
-    ``iters=None`` (the default) runs min-label propagation to the
-    FIXPOINT with a convergence check that fails loudly — a component
-    whose diameter exceeds a fixed iteration cap would otherwise silently
-    split into several entity ids, invisibly breaking per-entity dedup
-    caps and entity-balanced sampling downstream. Pass a fixed ``iters``
-    only when a deterministic k-bounded labeling is required (the
+    ``iters=None`` (the default) computes EXACT components with the
+    large-star/small-star loop, which fails loudly past its round cap — a
+    component whose diameter exceeds a fixed iteration cap would otherwise
+    silently split into several entity ids, invisibly breaking per-entity
+    dedup caps and entity-balanced sampling downstream. Pass a fixed
+    ``iters`` only when a deterministic k-bounded labeling is required (the
     cross-engine oracle twin unrolls the same k rounds).
     """
     edges = pairs.select(
         F.col("rid1").alias("src"), F.col("rid2").alias("dst"), F.lit(1).alias("w")
     )
     if iters is None:
-        comp = graph.connected_components_converged(edges)
+        comp = graph.connected_components_lsss(edges)
     else:
         comp = graph.connected_components(edges, iters=iters)
     comp = comp.select(

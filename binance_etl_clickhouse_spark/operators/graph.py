@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from binance_etl_clickhouse_spark.checkpoints import release, resolve_reliable, truncate
 from binance_etl_clickhouse_spark.operators.parallel import compact_persist
 
 DAMPING = 0.85
@@ -327,16 +328,13 @@ def connected_components(
     deterministic whether or not propagation has converged, which is what
     makes a cross-engine oracle possible (the DuckDB twin unrolls the same
     k rounds). For exact components regardless of diameter use
-    :func:`connected_components_converged` (fixpoint + loud failure) or
-    :func:`connected_components_lsss` (large-star/small-star contraction,
-    the real-scale default — O(log^2 n) rounds on any diameter).
+    :func:`connected_components_lsss` (large-star/small-star contraction —
+    O(log^2 n) rounds on any diameter, loud failure past its round cap).
 
-    ``reliable`` mirrors the converged/LSSS switch (r11 ADVICE item 3):
-    ``None`` auto-detects from ``sc.getCheckpointDir()``; ``False`` keeps
-    localCheckpoint even when a checkpoint dir was set for some other
-    operator, so this loop does not silently pay a durable write per round.
+    ``reliable`` picks the checkpoint mode, as in
+    :func:`checkpoints.resolve_reliable`.
     """
-    rel = _resolve_reliable(edges, reliable)
+    rel = resolve_reliable(edges, reliable)
     und = compact_persist(undirected(edges).select("u", "v"))
     labels = und.select("u").distinct().withColumn("lbl", F.col("u"))
     for _ in range(iters):
@@ -346,12 +344,8 @@ def connected_components(
         # exponential tree for the analyzer/optimizer to chew through
         # every round (the 4-round plan printed at 29k lines and driver
         # planning dominated the wall) — truncate the lineage instead,
-        # exactly like the converged/LSSS variants (guide §3.3/§7.3).
-        labels = (
-            _truncate_lineage(labels, rel)
-            if rel
-            else labels.localCheckpoint(eager=False)
-        )
+        # exactly like the LSSS loop (guide §3.3/§7.3).
+        labels = truncate(labels, rel)
         nb = (
             und.join(labels.withColumnRenamed("u", "v").withColumnRenamed("lbl", "nlbl"), "v")
             .groupBy("u")
@@ -365,146 +359,6 @@ def connected_components(
     return labels.select(
         F.col("u").alias("part_key"), F.col("lbl").cast("long").alias("component")
     )
-
-
-def _resolve_reliable(df: DataFrame, reliable: bool | None) -> bool:
-    """Resolve the checkpoint mode for an iterative loop.
-
-    ``None`` auto-detects: reliable iff ``sc.setCheckpointDir`` was called.
-    ``True`` requires a checkpoint dir (loud failure if unset — silently
-    falling back to localCheckpoint would fake the fault-tolerance the
-    caller asked for).
-    """
-    ckpt_dir = df.sparkSession.sparkContext.getCheckpointDir()
-    if reliable is None:
-        return ckpt_dir is not None
-    if reliable and ckpt_dir is None:
-        raise RuntimeError(
-            "reliable=True requires sc.setCheckpointDir(...) — localCheckpoint "
-            "blocks live on executors and do not survive executor loss"
-        )
-    return reliable
-
-
-def _release_local_blocks(df: DataFrame) -> None:
-    """Free a SUPERSEDED round's localCheckpoint blocks (local mode only).
-
-    A contraction loop keeps only the last two rounds live; without this,
-    every round's blocks sit on the executor until the driver GC +
-    ContextCleaner get around to them (r11 ADVICE item 2). Only call on a
-    frame that will NEVER be read again — the checkpoint cut its lineage,
-    so a freed block cannot be recomputed (re-reading raises
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Best-effort: reaches through the
-    LogicalRDD plan node, so any API drift degrades to the old
-    GC-eventually behavior rather than failing the query.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never kill the loop
-        pass
-
-
-def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
-    """Cut plan lineage between rounds of an iterative loop.
-
-    ``localCheckpoint`` truncates lineage but stores the blocks on
-    EXECUTORS — losing one mid-loop kills the query (lineage is gone with
-    the blocks). ``checkpoint()`` writes to the reliable checkpoint dir
-    and survives executor loss, at the cost of a round-trip to storage per
-    round — the right trade for long data-dependent loops on a real
-    cluster, where some executor loss over hundreds of rounds is expected.
-
-    Storage hygiene: Spark does NOT delete reliable checkpoint files by
-    default — superseded rounds accrete until application exit unless
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` lets the
-    ContextCleaner reclaim them as the per-round frames are
-    garbage-collected. :func:`session.get_spark` sets it; long-lived
-    sessions built elsewhere must too.
-    """
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
-
-
-def connected_components_converged(
-    edges: DataFrame,
-    max_rounds: int = 50,
-    reliable: bool | None = None,
-    round_counter: list | None = None,
-) -> DataFrame:
-    """Min-label propagation run to the FIXPOINT: iterate until no label
-    changes, failing loudly past ``max_rounds`` — never returning a
-    part-propagated labeling (a component with diameter > the cap would
-    silently split, which downstream consumers like entity resolution and
-    leakage-safe splitting cannot detect). Same loud-failure contract as
-    ``neardup_clusters`` (operators/neardup.py).
-
-    Scale shape: one shuffle per round plus a LIMIT-1 changed-check job
-    (short-circuits after the first changed row). Each round's label frame
-    is CHECKPOINTED, not merely persisted: every round references the
-    previous labels three times (neighbor-min, rejoin, changed-check), so
-    without lineage truncation the logical plan grows 3^rounds — a
-    diameter-12 graph produced a 2 GB plan string before this.
-
-    ``reliable`` picks the checkpoint mode: ``False`` = localCheckpoint
-    (executor-memory blocks; fine on one JVM, but an executor loss
-    mid-loop kills the query on a cluster), ``True`` = ``.checkpoint()``
-    to the reliable checkpoint dir (requires ``sc.setCheckpointDir``;
-    frames survive executor loss), ``None`` (default) = auto: reliable
-    iff a checkpoint dir is set. Rounds needed = graph diameter; for the
-    O(log^2 n)-round guarantee on high-diameter graphs use
-    :func:`connected_components_lsss`. Pass a list as ``round_counter`` to
-    receive the round count actually used (scale-rehearsal telemetry).
-    """
-    rel = _resolve_reliable(edges, reliable)
-    und = undirected(edges).select("u", "v").persist()
-    labels = _truncate_lineage(
-        und.select("u").distinct().withColumn("lbl", F.col("u")), rel
-    )
-    converged = False
-    try:
-        for rnd in range(max_rounds):
-            nb = (
-                und.join(
-                    labels.withColumnRenamed("u", "v").withColumnRenamed("lbl", "nlbl"),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.min("nlbl").alias("nlbl"))
-            )
-            new_labels = _truncate_lineage(
-                labels.join(nb, "u").select(
-                    "u", F.least("lbl", "nlbl").alias("lbl")
-                ),
-                rel,
-            )
-            changed = (
-                new_labels.join(labels.withColumnRenamed("lbl", "old"), "u")
-                .filter(F.col("lbl") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            # the changed-check was the old label frame's last reader —
-            # free its blocks now (see _release_local_blocks)
-            if not rel:
-                _release_local_blocks(labels)
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                if round_counter is not None:
-                    round_counter.append(rnd + 1)
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_converged: no fixpoint within "
-                f"{max_rounds} rounds (component diameter exceeds the cap); "
-                "raise max_rounds or use connected_components_lsss"
-            )
-        return labels.select(
-            F.col("u").alias("part_key"), F.col("lbl").cast("long").alias("component")
-        )
-    finally:
-        und.unpersist()
 
 
 def connected_components_lsss(
@@ -529,18 +383,22 @@ def connected_components_lsss(
     The edge frame shrinks toward the star graph parent->root; fixpoint is
     reached when a round changes nothing (hash-agnostic check: edge-set
     symmetric difference is empty, one count job). Fails loudly past
-    ``max_rounds`` like :func:`connected_components_converged`, and takes
-    the same ``reliable`` checkpoint-mode switch (None = auto-detect from
-    ``sc.getCheckpointDir()``) and ``round_counter`` telemetry list.
+    ``max_rounds`` — never returning a part-contracted labeling, which
+    would silently split a component (entity resolution and leakage-safe
+    splitting downstream cannot detect that). ``reliable`` picks the
+    checkpoint mode (:func:`checkpoints.resolve_reliable`; None =
+    auto-detect from ``sc.getCheckpointDir()``); pass a list as
+    ``round_counter`` to receive the round count actually used
+    (scale-rehearsal telemetry).
 
     Returns ``(part_key, component)`` where component = min vertex id of
     the part's component.
     """
-    rel = _resolve_reliable(edges, reliable)
+    rel = resolve_reliable(edges, reliable)
     # Rounds are lineage-truncated, not merely persisted: each round
     # references the previous edge frame several times (symmetrize, min,
     # join, diff), so the plan grows exponentially in rounds otherwise
-    # (see connected_components_converged).
+    # (a diameter-12 graph once produced a 2 GB plan string).
     #
     # Seed WITHOUT the symmetrized frame (r12, guide §2.4): the loop never
     # touches `und` — its only consumers were the vertex set and the
@@ -553,8 +411,8 @@ def connected_components_lsss(
     e0_raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     # lazy in local mode like the round frames: the seed count below
     # materializes the blocks and returns the count in one job
-    e0 = _truncate_lineage(e0_raw, rel) if rel else e0_raw.localCheckpoint(eager=False)
-    # vertex coverage matches the other two component variants: nodes come
+    e0 = truncate(e0_raw, rel)
+    # vertex coverage matches connected_components: nodes come
     # from the PRE-self-loop-filter edge set, so a vertex whose only
     # incident edges are self-loops still labels itself (self-loops are
     # then dropped from the contraction — they carry no connectivity).
@@ -566,9 +424,7 @@ def connected_components_lsss(
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
-    # lazy localCheckpoint in local mode: the seed count materializes the
-    # blocks and returns the count in one job (see the round loop below)
-    cur = _truncate_lineage(cur0, rel) if rel else cur0.localCheckpoint(eager=False)
+    cur = truncate(cur0, rel)
     converged = False
     cur_n = cur.count()  # carried across rounds: each round counts only nxt
     try:
@@ -607,14 +463,8 @@ def connected_components_lsss(
             )
             # local mode: LAZY localCheckpoint, so the convergence count
             # below both materializes the checkpoint blocks and returns
-            # the count in ONE job per round (eager + count was two).
-            # Reliable mode keeps the eager write — the count must read
-            # the durable copy, not race the job that produces it.
-            nxt = (
-                _truncate_lineage(small, rel)
-                if rel
-                else small.localCheckpoint(eager=False)
-            )
+            # the count in ONE job per round (eager + count was two)
+            nxt = truncate(small, rel)
             # convergence check, cheapest-first and EXACT: unequal counts
             # (one agg over the just-checkpointed frame; the previous
             # round's count is carried, not recomputed) prove non-
@@ -626,8 +476,7 @@ def connected_components_lsss(
                 # the superseded round's blocks are dead once nxt's count
                 # materialized its checkpoint — free them now instead of
                 # waiting for driver GC (bounds residency to two rounds)
-                if not rel:
-                    _release_local_blocks(cur)
+                release(cur)
                 cur, cur_n = nxt, nxt_n
                 continue
             diff = (
@@ -636,8 +485,7 @@ def connected_components_lsss(
                 .limit(1)
                 .count()
             )
-            if not rel:
-                _release_local_blocks(cur)
+            release(cur)
             cur, cur_n = nxt, nxt_n
             if diff == 0:
                 converged = True
@@ -677,26 +525,22 @@ def hits_bipartite(
     fixed-iteration, broadcast-scalar envelope as :func:`pagerank`.
     ``reliable`` as in :func:`connected_components`.
     """
-    rel = _resolve_reliable(edges, reliable)
-
-    def _stage(df: DataFrame) -> DataFrame:
+    rel = resolve_reliable(edges, reliable)
+    e = compact_persist(edges.select("hub", "auth"))
+    h = e.select("hub").distinct().withColumn("s", F.lit(1.0))
+    a = None
+    for _ in range(iters):
         # every push is referenced twice (L2-norm agg + normalize join) —
         # truncate the LINEAGE per half-round, not just the execution:
         # persist() reused blocks but left a 2^(2*iters)-copy logical tree
         # for the analyzer (the 2-iteration plan printed at 33k lines and
         # driver planning dominated the wall; guide §3.3/§7.3)
-        return _truncate_lineage(df, rel) if rel else df.localCheckpoint(eager=False)
-
-    e = compact_persist(edges.select("hub", "auth"))
-    h = e.select("hub").distinct().withColumn("s", F.lit(1.0))
-    a = None
-    for _ in range(iters):
-        a = _stage(e.join(h, "hub").groupBy("auth").agg(F.sum("s").alias("s")))
+        a = truncate(e.join(h, "hub").groupBy("auth").agg(F.sum("s").alias("s")), rel)
         na = a.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
         a = a.crossJoin(F.broadcast(na)).select(
             "auth", (F.col("s") / F.col("nrm")).alias("s")
         )
-        h = _stage(e.join(a, "auth").groupBy("hub").agg(F.sum("s").alias("s")))
+        h = truncate(e.join(a, "auth").groupBy("hub").agg(F.sum("s").alias("s")), rel)
         nh = h.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
         h = h.crossJoin(F.broadcast(nh)).select(
             "hub", (F.col("s") / F.col("nrm")).alias("s")
@@ -729,18 +573,14 @@ def bfs_levels(
     :func:`connected_components`; the frontier frame is monotone growing
     and bounded by |V|. ``reliable`` as in :func:`connected_components`.
     """
-    rel = _resolve_reliable(edges, reliable)
+    rel = resolve_reliable(edges, reliable)
     und = compact_persist(undirected(edges).select("u", "v"))
     dist = seeds.select("u").distinct().withColumn("hop", F.lit(0))
     for _ in range(max_hops):
         # per-round lineage truncation, not persist: the frontier is
         # referenced twice per round and the plan doubles otherwise (see
         # connected_components)
-        dist = (
-            _truncate_lineage(dist, rel)
-            if rel
-            else dist.localCheckpoint(eager=False)
-        )
+        dist = truncate(dist, rel)
         nb = (
             und.join(dist.withColumnRenamed("u", "v").withColumnRenamed("hop", "nhop"), "v")
             .groupBy("u")

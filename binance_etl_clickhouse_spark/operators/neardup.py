@@ -32,6 +32,7 @@ from pyspark.storagelevel import StorageLevel
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import Observation
 
+from binance_etl_clickhouse_spark.operators import graph
 from binance_etl_clickhouse_spark.operators.parallel import ensure_min_parallelism
 from binance_etl_clickhouse_spark.operators.texthash import (
     M31,
@@ -542,68 +543,9 @@ def embedding_cosine_pairs_gemm(
 
 #: driver-side-closure bound: 200k undirected edge rows ≈ 3 MB on the
 #: driver — far below any practical driver heap, far above any deduped
-#: corpus's near-dup pair graph. Past it, the distributed loop takes over.
+#: corpus's near-dup pair graph. Past it, the distributed loop
+#: (:func:`graph.connected_components_lsss`) takes over.
 DRIVER_CLOSURE_MAX_EDGES = 200_000
-
-
-def _label_pair_graph_distributed(
-    edges: DataFrame, max_rounds: int
-) -> DataFrame:
-    """Min-label propagation over the (a, b) edge frame -> (node, lbl).
-
-    One equi-join + one groupBy(min) shuffle per round, both O(|pairs|);
-    rounds needed = component diameter (shallow for near-dup chains), with
-    a loud failure past the cap — part-propagated labels would silently
-    split a component, which leakage_safe_split cannot detect.
-    """
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .cache()
-    )
-    converged = False
-    loop_cache = labels  # the currently-persisted loop frame, for cleanup
-    try:
-        for _ in range(max_rounds):
-            prop = edges.join(
-                labels.select(F.col("node").alias("b"), F.col("lbl")), "b"
-            ).select(F.col("a").alias("node"), "lbl")
-            new_labels = (
-                labels.union(prop).groupBy("node").agg(F.min("lbl").alias("lbl")).cache()
-            )
-            changed = (
-                new_labels.join(labels.withColumnRenamed("lbl", "old"), "node")
-                .filter(F.col("lbl") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            labels.unpersist()
-            labels = loop_cache = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"neardup_clusters: min-label propagation did not reach the "
-                f"fixpoint within {max_rounds} rounds (component diameter "
-                "exceeds the cap); raise max_rounds or switch the loop body "
-                "to large-star/small-star contraction"
-            )
-        # Truncate the fixpoint labels' lineage BEFORE releasing the loop
-        # caches: the returned plan is consumed after the caches are gone,
-        # and each reference would otherwise re-run the whole rounds-deep
-        # propagation INCLUDING the pair detection upstream (measured 10x
-        # wall / 20x job blow-up). Reliable mode engages automatically when
-        # the session has a checkpoint dir (operators/graph).
-        from binance_etl_clickhouse_spark.operators.graph import (
-            _resolve_reliable,
-            _truncate_lineage,
-        )
-
-        return _truncate_lineage(labels, _resolve_reliable(labels, None))
-    finally:
-        loop_cache.unpersist()
 
 
 def _label_pair_graph_local(edges_rows, spark, dtype) -> DataFrame:
@@ -659,9 +601,10 @@ def neardup_clusters(
       bounded edge list and union-find on the driver — 2 Spark actions
       total instead of one count per propagation round, the same
       bounded-collect collapse that took MMR from R+1 jobs to 4.
-    - past the bound (duplicate-storm pair graphs): distributed min-label
-      propagation, one O(|pairs|) join + groupBy shuffle per round, loud
-      failure past ``max_rounds``.
+    - past the bound (duplicate-storm pair graphs): the distributed
+      large-star/small-star loop (:func:`graph.connected_components_lsss`),
+      O(log^2 n) rounds of O(|pairs|) shuffles on any component diameter,
+      loud failure past ``max_rounds``.
 
     Deterministic in both regimes: the fixpoint (min reachable id) is
     unique regardless of iteration order, so a DuckDB recursive-CTE twin
@@ -681,7 +624,14 @@ def neardup_clusters(
                 edges.collect(), df.sparkSession, edges.schema["a"].dataType
             )
         else:
-            labels = _label_pair_graph_distributed(edges, max_rounds)
+            comp = graph.connected_components_lsss(
+                edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+                max_rounds=max_rounds,
+            )
+            labels = comp.select(
+                F.col("part_key").alias("node"),
+                F.col("component").cast(edges.schema["a"].dataType).alias("lbl"),
+            )
         # one pass back over the corpus: unpaired docs are their own
         # singleton cluster (coalesce to self). No forced broadcasts here:
         # the paired-label frame is usually tiny (AQE broadcasts it), but
@@ -702,8 +652,8 @@ def neardup_clusters(
         )
     finally:
         # release the edge cache: the returned plan reads either the
-        # driver-built label frame or the checkpointed fixpoint, so nothing
-        # recomputes on consumption.
+        # driver-built label frame or the loop's checkpointed frames, so
+        # the pair detection upstream never recomputes on consumption.
         edges.unpersist()
 
 

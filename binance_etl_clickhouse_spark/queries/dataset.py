@@ -682,9 +682,10 @@ def prep_pipeline_v3_frame(docs: DataFrame, overflow=None) -> DataFrame:
     minhash's eviction counts (overflow_rows / overflow_buckets /
     max_bucket) after the result is materialized; the per-bucket report is
     :func:`operators.neardup.minhash_band_overflow`. Intermediate frames
-    are lineage-truncated (localCheckpoint, or reliable checkpoint when a
-    checkpoint dir is set), NOT persist()ed, so a long-lived session
-    calling this repeatedly does not accrete CacheManager entries. Block
+    are lineage-truncated (:func:`checkpoints.truncate`: lazy
+    localCheckpoint, or eager reliable checkpoint when a checkpoint dir is
+    set), NOT persist()ed, so a long-lived session calling this repeatedly
+    does not accrete CacheManager entries. Block
     reclamation differs by mode: localCheckpoint blocks are executor
     memory/disk freed when the frames are garbage-collected; RELIABLE
     checkpoint files are only removed by the ContextCleaner under
@@ -693,20 +694,17 @@ def prep_pipeline_v3_frame(docs: DataFrame, overflow=None) -> DataFrame:
     dir but without that conf accretes one directory per truncation until
     the application exits).
     """
+    from binance_etl_clickhouse_spark.checkpoints import resolve_reliable, truncate
     from binance_etl_clickhouse_spark.operators import corpus as corpus_ops
     from binance_etl_clickhouse_spark.operators import neardup
-    from binance_etl_clickhouse_spark.operators.graph import (
-        _resolve_reliable,
-        _truncate_lineage,
-    )
 
-    rel = _resolve_reliable(docs, None)
+    rel = resolve_reliable(docs, None)
     canon_ids = neardup.exact_dup_canonical(docs).select(
         F.col("canonical_id").alias("doc_id")
     )
     # exact-canonical survivors feed three stages (minhash, substring,
     # gopher) — materialize them once
-    exact = _truncate_lineage(
+    exact = truncate(
         docs.join(canon_ids, "doc_id", "semi").select("doc_id", "lang", "text"),
         rel,
     )
@@ -714,7 +712,7 @@ def prep_pipeline_v3_frame(docs: DataFrame, overflow=None) -> DataFrame:
         exact, k=3, threshold=0.5, band_cap=_V3_BAND_CAP, overflow=overflow
     )
     clusters = neardup.neardup_clusters(exact, pairs)
-    ndv = _truncate_lineage(
+    ndv = truncate(
         exact.join(
             clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
                 "doc_id", "cluster_id"

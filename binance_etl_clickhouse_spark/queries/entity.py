@@ -148,13 +148,13 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part p JOIN resolved r
       ON r.p_name = p.p_name AND r.p_brand = p.p_brand
     """,
-    survey_ref="entity resolution: per-row entity ids with CONVERGED components (fixpoint propagation, loud failure past the round cap)",
+    survey_ref="entity resolution: per-row entity ids with CONVERGED components (large-star/small-star to the fixpoint, loud failure past the round cap)",
 )
 def entity_resolution_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production entity path: components run to the fixpoint
-    (``iters=None``), so entity ids are exact for any component diameter;
-    the oracle computes true components via a recursive min-label
-    closure rather than truncating at k rounds."""
+    (``iters=None``, large-star/small-star contraction), so entity ids are
+    exact for any component diameter; the oracle computes true components
+    via a recursive min-label closure rather than truncating at k rounds."""
     records = _records(spark, sf_dir)
     resolved = entity.resolve_entities(records, _pairs(records))
     return (

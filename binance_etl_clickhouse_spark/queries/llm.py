@@ -1322,8 +1322,9 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Near-dup clustering: connected components over the Jaccard pair graph —
 # pair detection -> transitive keep/drop groups (canonical id = min id
-# reachable). The Spark side iterates min-label propagation to a fixpoint;
-# the oracle computes the same fixpoint as a recursive transitive-closure
+# reachable). The Spark side closes the pair graph exactly (driver
+# union-find, or large-star/small-star contraction past the edge bound);
+# the oracle computes the same closure as a recursive transitive-closure
 # CTE. Both are exact, so the hash must match.
 # ---------------------------------------------------------------------------
 @register(

@@ -38,14 +38,12 @@ def with_cache_hygiene(fn: SparkQuery) -> SparkQuery:
     already materialized) and touches only SQL cache entries —
     localCheckpoint storage lives at the RDD layer and is unaffected.
 
-    Since r12 the wipe also unpersists leftover RDD-LAYER blocks
-    (``sc.getPersistentRDDs``): the iterative loops truncate lineage with
-    ``localCheckpoint``, whose blocks are NOT CacheManager entries —
-    ``clearCache()`` never touches them, so a 50-query sweep accretes
-    every prior query's round blocks until the driver GC + ContextCleaner
-    catch up (r11 ADVICE item 2). Safe under the same sweep contract:
-    the previous query's result was fully materialized before this build
-    starts, so no freed block is ever re-read.
+    The wrapper does NOT free RDD-layer blocks: a previous frame may be
+    built but not yet read, and its localCheckpoint blocks cannot be
+    recomputed once freed. The iterative loops release their superseded
+    rounds themselves (:func:`checkpoints.release`); a loop that owns the
+    session and has fully read every frame (bench, the parity suite)
+    calls :func:`clear_rdd_blocks` itself.
 
     The wipe is session-global, so it is applied ONLY at the driver/bench
     boundary (``queries_map(cache_hygiene=True)``, used by
@@ -59,7 +57,6 @@ def with_cache_hygiene(fn: SparkQuery) -> SparkQuery:
             spark.catalog.clearCache()
         except Exception:  # noqa: BLE001 — cache hygiene is best-effort
             pass
-        clear_rdd_blocks(spark)
         return fn(spark, sf_dir)
 
     return wrapped

@@ -33,9 +33,9 @@ _BASE_CONFS: dict[str, str] = {
     # Avoid driver-side OOM from accidental wide collects in tests.
     "spark.driver.maxResultSize": "4g",
     "spark.ui.enabled": "false",
-    # Reliable-checkpoint hygiene: the iterative loops (graph CC / HITS /
-    # PageRank, the v3 prep pipeline) write df.checkpoint(eager=True) per
-    # round when a checkpoint dir is set. Spark only reclaims those files
+    # Reliable-checkpoint hygiene: the iterative loops (graph components /
+    # BFS / HITS, the v3 prep pipeline) write df.checkpoint(eager=True) per
+    # round when a checkpoint dir is set (checkpoints.truncate). Spark only reclaims those files
     # when the ContextCleaner is allowed to (default FALSE) — without this,
     # hundreds of rounds in a long-lived session accrete unbounded
     # checkpoint storage. With it, each superseded round's files are

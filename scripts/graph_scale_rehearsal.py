@@ -81,29 +81,24 @@ def main() -> None:
             flush=True,
         )
 
-    # convergent variants: the O(log^2 n)-rounds claim is measured at TWO
-    # scales (r6 verdict item 8) — wall AND the data-dependent round count,
-    # which must stay flat when |V|,|E| grow 10x at fixed density (the 10x
-    # graph is 10 disconnected copies: same component structure).
-    conv_ops = {
-        "connected_components_converged": graph.connected_components_converged,
-        "connected_components_lsss": graph.connected_components_lsss,
-    }
-    for name, fn in conv_ops.items():
-        times, rounds = {}, {}
-        for label, li in (("1x", li_1x), ("10x", li_10x)):
-            rc: list = []
-            t0 = time.time()
-            _noop(fn(graph.copurchase_edges(li), round_counter=rc))
-            times[label] = time.time() - t0
-            rounds[label] = rc[0] if rc else -1
-            spark.catalog.clearCache()
-        print(
-            f"{name}: 1x={times['1x']:.2f}s ({rounds['1x']} rounds) "
-            f"10x={times['10x']:.2f}s ({rounds['10x']} rounds) "
-            f"scale={times['10x'] / times['1x']:.2f}x",
-            flush=True,
-        )
+    # the exact components loop: the O(log^2 n)-rounds claim is measured at
+    # TWO scales (r6 verdict item 8) — wall AND the data-dependent round
+    # count, which must stay flat when |V|,|E| grow 10x at fixed density
+    # (the 10x graph is 10 disconnected copies: same component structure).
+    times, rounds = {}, {}
+    for label, li in (("1x", li_1x), ("10x", li_10x)):
+        rc: list = []
+        t0 = time.time()
+        _noop(graph.connected_components_lsss(graph.copurchase_edges(li), round_counter=rc))
+        times[label] = time.time() - t0
+        rounds[label] = rc[0] if rc else -1
+        spark.catalog.clearCache()
+    print(
+        f"connected_components_lsss: 1x={times['1x']:.2f}s ({rounds['1x']} rounds) "
+        f"10x={times['10x']:.2f}s ({rounds['10x']} rounds) "
+        f"scale={times['10x'] / times['1x']:.2f}x",
+        flush=True,
+    )
 
 
 if __name__ == "__main__":

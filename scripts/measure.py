@@ -1,13 +1,13 @@
-"""Round-11 optimization measurement harness.
+"""Per-query optimization measurement harness.
 
-Times individual registered queries exactly like bench.py (cold cache per
-run, noop sink, best-of-N) and captures ``.explain('formatted')`` to
-``plans/r12/<name>_<tag>.txt``. Not part of the driver contract — a
-developer tool for the optimization rounds.
+Times individual registered queries exactly like bench.py (cold SQL cache
+and no leftover RDD blocks per run, noop sink, best-of-N) and captures
+``.explain('formatted')`` to ``plans/<name>_<tag>.txt``. Not part of the
+driver contract — a developer tool for optimization work.
 
 Usage:
-    python scripts/measure_r12.py --tag before --runs 3 name1 name2 ...
-    python scripts/measure_r12.py --tag before --runs 2 --all-headline
+    python scripts/measure.py --tag before --runs 3 name1 name2 ...
+    python scripts/measure.py --tag before --runs 2 --all-headline
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from binance_etl_clickhouse_spark.queries import QUERIES
+    from binance_etl_clickhouse_spark.queries.registry import clear_rdd_blocks
     from binance_etl_clickhouse_spark.session import get_spark
 
     names = list(args.names)
@@ -44,18 +45,19 @@ def main() -> None:
 
         names = [n for n in bench.HEADLINE if n not in names] + names
 
-    spark = get_spark(app_name="measure_r12", shuffle_partitions=8)
+    spark = get_spark(app_name="measure", shuffle_partitions=8)
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
 
-    plans_dir = Path(_REPO_ROOT) / "plans" / "r12"
+    plans_dir = Path(_REPO_ROOT) / "plans"
     plans_dir.mkdir(parents=True, exist_ok=True)
     out: dict[str, float] = {}
     for name in names:
         entry = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"r12:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{name}")
         best = float("inf")
         for i in range(args.runs):
             spark.catalog.clearCache()
+            clear_rdd_blocks(spark)
             t0 = time.perf_counter()
             df = entry.spark(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()

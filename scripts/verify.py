@@ -1,11 +1,11 @@
-"""Round-11 per-query oracle verification at arbitrary SF.
+"""Per-query oracle verification at arbitrary SF.
 
 Mirrors the driver's compare (tests/test_oracle_parity.py) but callable
 per-query per-SF from the command line, so an optimization's equivalence
 proof covers sf0.001 / sf0.01 / sf0.1 before the change is committed.
 
 Usage:
-    python scripts/verify_r12.py name1 name2 ... [--sf 0.001 0.01 0.1]
+    python scripts/verify.py name1 name2 ... [--sf 0.001 0.01 0.1]
 """
 
 from __future__ import annotations
@@ -27,10 +27,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from binance_etl_clickhouse_spark.queries import QUERIES, with_cache_hygiene
+    from binance_etl_clickhouse_spark.queries.registry import clear_rdd_blocks
     from binance_etl_clickhouse_spark.session import get_spark
     from binance_etl_clickhouse_spark.testing import compare_frames, run_oracle
 
-    spark = get_spark(app_name="verify_r12", shuffle_partitions=8)
+    spark = get_spark(app_name="verify", shuffle_partitions=8)
     failures = 0
     for sf in args.sf:
         sf_dir = f"/root/testdata/sf{sf}"
@@ -38,10 +39,12 @@ def main() -> None:
             entry = QUERIES[name]
             if entry.oracle is None:
                 n = with_cache_hygiene(entry.spark)(spark, sf_dir).count()
+                clear_rdd_blocks(spark)
                 print(f"ROWS-ONLY sf{sf} {name}: {n} rows", flush=True)
                 continue
             t0 = time.perf_counter()
             spark_pdf = with_cache_hygiene(entry.spark)(spark, sf_dir).toPandas()
+            clear_rdd_blocks(spark)  # the frame is fully read
             oracle_pdf = run_oracle(entry.oracle, sf_dir)
             problems = compare_frames(spark_pdf, oracle_pdf, name)
             dt = time.perf_counter() - t0

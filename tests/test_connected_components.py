@@ -1,10 +1,11 @@
-"""Convergence semantics of the three connected-component forms.
+"""Convergence semantics of the two connected-component forms.
 
 The failure mode these tests pin: a component whose diameter exceeds a
 fixed iteration cap silently SPLITS under k-bounded propagation — and
 because the DuckDB oracle truncates identically, the parity suite can
-never catch it. The convergent forms must not split, and must fail
-loudly (never return partial labels) when their round cap is hit.
+never catch it. The exact (large-star/small-star) form must not split,
+and must fail loudly (never return partial labels) when its round cap is
+hit.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def test_fixed_k_splits_long_chain_but_converged_does_not(spark):
     edges = _path_edges(spark, 12)  # diameter 12 >> 4 rounds
     fixed = _components(graph.connected_components(edges, iters=4))
     assert len(fixed) > 1  # the documented k-bounded truncation
-    conv = _components(graph.connected_components_converged(edges))
+    conv = _components(graph.connected_components_lsss(edges))
     assert len(conv) == 1 and conv[0] == set(range(13))
 
 
@@ -52,16 +53,14 @@ def test_lsss_exact_on_long_chain_and_multi_component(spark):
 
 
 def test_lsss_labels_self_loop_only_vertices(spark):
-    """Vertex coverage parity across the three variants: a vertex whose
+    """Vertex coverage parity across the two variants: a vertex whose
     only incident edges are self-loops must still label itself (it IS a
-    singleton component), exactly as connected_components and
-    connected_components_converged treat it."""
+    singleton component), exactly as connected_components treats it."""
     rows = [(0, 1, 1), (7, 7, 1)]  # one real edge + a self-loop-only vertex
     edges = spark.createDataFrame(rows, ["src", "dst", "w"])
     lsss = _components(graph.connected_components_lsss(edges))
-    conv = _components(graph.connected_components_converged(edges))
     fixed = _components(graph.connected_components(edges, iters=2))
-    assert lsss == conv == fixed == {0: {0, 1}, 7: {7}}
+    assert lsss == fixed == {0: {0, 1}, 7: {7}}
 
 
 def _clear_checkpoint_dir(spark):
@@ -91,18 +90,18 @@ def _rglob_safe(root):
 
 
 def test_reliable_checkpoint_mode(spark, tmp_path):
-    """With a checkpoint dir set, the convergent loops auto-switch to
+    """With a checkpoint dir set, the exact loop auto-switches to
     RELIABLE .checkpoint() frames (they survive executor loss, unlike
     localCheckpoint blocks); reliable=True without a dir fails loudly
     instead of silently faking fault-tolerance."""
     edges = _path_edges(spark, 6)
     assert spark.sparkContext.getCheckpointDir() is None
     with pytest.raises(RuntimeError, match="setCheckpointDir"):
-        graph.connected_components_converged(edges, reliable=True)
+        graph.connected_components_lsss(edges, reliable=True)
     ckpt = str(tmp_path / "ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     try:
-        conv = _components(graph.connected_components_converged(edges))
+        conv = _components(graph.connected_components_lsss(edges))
         assert conv == {0: set(range(7))}
         # reliable frames were actually written to the checkpoint dir
         files = _rglob_safe(tmp_path / "ckpt")
@@ -117,7 +116,7 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
         # background cleaner can legitimately SHRINK the set while this
         # runs (see _rglob_safe).
         before = _rglob_safe(tmp_path / "ckpt")
-        graph.connected_components_converged(edges, reliable=False).collect()
+        graph.connected_components_lsss(edges, reliable=False).collect()
         assert _rglob_safe(tmp_path / "ckpt") <= before
     finally:
         _clear_checkpoint_dir(spark)
@@ -125,13 +124,14 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
 
 def test_converged_raises_past_round_cap(spark):
     edges = _path_edges(spark, 8)
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        graph.connected_components_converged(edges, max_rounds=2).collect()
+    # LSSS needs 4 rounds on this path
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components_lsss(edges, max_rounds=2).collect()
 
 
 def test_resolve_entities_converged_by_default(spark):
     """A 6-record match chain (diameter 5): fixed iters=3 splits it into
-    two entities; the default (converged) resolves one entity, and
+    two entities; the default (exact LSSS) resolves one entity, and
     singletons keep their own rid either way."""
     records = spark.createDataFrame(
         [(i, f"rec {i}", 1) for i in range(6)] + [(99, "lonely", 1)],

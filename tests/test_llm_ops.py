@@ -395,14 +395,14 @@ def test_neardup_clusters_raises_when_cap_too_small(spark):
 
     from binance_etl_clickhouse_spark.operators.neardup import neardup_clusters
 
-    # chain 0-1-2-3-4-5: min-label needs 5 rounds to reach the far end.
+    # chain 0-1-2-3-4-5: the large-star/small-star loop needs 4 rounds.
     # driver_max_edges=0 forces the DISTRIBUTED regime (small graphs take
     # the bounded driver-side union-find, which has no round cap).
     docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "d1 long, d2 long"
     )
-    with _pytest.raises(RuntimeError, match="did not reach the fixpoint"):
+    with _pytest.raises(RuntimeError, match="did not converge"):
         neardup_clusters(docs, pairs, max_rounds=2, driver_max_edges=0).collect()
     # with a sufficient cap the same chain converges to one cluster
     out = neardup_clusters(docs, pairs, max_rounds=10, driver_max_edges=0).collect()

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from binance_etl_clickhouse_spark.queries import QUERIES, with_cache_hygiene
+from binance_etl_clickhouse_spark.queries.registry import clear_rdd_blocks
 from binance_etl_clickhouse_spark.testing import compare_frames, run_oracle
 
 SF_DIR = (
@@ -25,10 +26,13 @@ ROWS_ONLY_QUERIES = sorted(n for n, e in QUERIES.items() if e.oracle is None)
 # builders (clear the SQL cache before each build), because hundreds of
 # queries share this one session and stale CacheManager entries have NPE'd
 # Spark under memory pressure. Production callers get the raw builders.
+# The sweep owns its loop, so it frees leftover RDD-layer blocks itself,
+# once each frame has been fully read.
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, name):
     entry = QUERIES[name]
     spark_pdf = with_cache_hygiene(entry.spark)(spark, SF_DIR).toPandas()
+    clear_rdd_blocks(spark)
     oracle_pdf = run_oracle(entry.oracle, SF_DIR)
     problems = compare_frames(spark_pdf, oracle_pdf, name)
     assert not problems, "\n".join(problems)
@@ -38,6 +42,7 @@ def test_query_matches_oracle(spark, name):
 def test_rows_only_query_runs(spark, name):
     df = with_cache_hygiene(QUERIES[name].spark)(spark, SF_DIR)
     assert df.count() >= 0
+    clear_rdd_blocks(spark)
     assert len(df.schema.fields) > 0
 
 
@@ -108,6 +113,18 @@ def test_raw_builders_leave_external_caches_alone(spark):
         assert leftover.storageLevel.useMemory
     finally:
         leftover.unpersist()
+
+
+def test_hygiene_wrapper_keeps_unread_frames_readable(spark):
+    """Building query B through the driver-facing wrapper must not free
+    the checkpoint blocks of query A's frame, built but not yet read —
+    localCheckpoint blocks cannot be recomputed once freed."""
+    first = with_cache_hygiene(QUERIES["cc_large_star_small_star"].spark)(spark, SF_DIR)
+    with_cache_hygiene(QUERIES["graph_connected_components"].spark)(spark, SF_DIR)
+    got = sorted(map(tuple, first.collect()))
+    fresh = QUERIES["cc_large_star_small_star"].spark(spark, SF_DIR).collect()
+    assert got == sorted(map(tuple, fresh))
+    clear_rdd_blocks(spark)
 
 
 def test_driver_facing_builders_drop_stale_cache_entries(spark):

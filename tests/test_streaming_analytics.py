@@ -713,7 +713,7 @@ def test_localcheckpoint_release_frees_blocks(spark):
     unpersist() nor the ContextCleaner reclaims a locally-checkpointed
     RDD (verified empirically), which is why the streaming sinks and the
     BPE trainer call it explicitly."""
-    from binance_etl_clickhouse_spark.checkpoints import release
+    from binance_etl_clickhouse_spark.checkpoints import release, truncate
 
     sc = spark.sparkContext
 
@@ -724,6 +724,12 @@ def test_localcheckpoint_release_frees_blocks(spark):
     df = spark.range(50_000).localCheckpoint(eager=True)
     assert n_persisted() == base + 1
     release(df)
+    assert n_persisted() == base
+    # the lazy local frames the graph loops cut and free round by round
+    lazy = truncate(spark.range(50_000), False)
+    assert lazy.count() == 50_000
+    assert n_persisted() == base + 1
+    release(lazy)
     assert n_persisted() == base
     release(None)  # no-op contract
     release(spark.range(5))  # non-checkpointed frame: no-op, no raise
